@@ -4,7 +4,9 @@ import graft.functions.Fns
 import graft.operators.{ConnectedComponents, ExactSubstr, Lsh}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.LongAccumulator
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /**
  * The user-facing façade: what a caller of the reference engine switches
@@ -14,125 +16,174 @@ import org.apache.spark.storage.StorageLevel
  */
 object Dedup {
 
-  /** The lazy verified-pair plan plus the intermediate localCheckpoints
-    * backing it (for block lifecycle). EAGER up to the candidate counts
-    * (one union action materializes all three families — their stages
-    * overlap across the executor pool; the counts gate the broadcast
-    * semi-restriction of the verify joins); the final verify+union plan is
-    * returned lazy so callers (and PlanSpec) can see/extend it. */
-  private[graft] def dupPairsPlan(docs: DataFrame, cfg: DedupConfig)
-      : (DataFrame, Seq[DataFrame]) = {
-    // Job-phase labels (free: a thread-local property) — ScalingBench's
-    // phase listener attributes wall and Σ-task-time per labeled job, the
-    // instrument that pins WHICH term stops scaling 8→32 (VERDICT_r5 #3).
-    val sc = docs.sparkSession.sparkContext
-    // restore the CALLER's description afterwards instead of clobbering
-    // it with null (ADVICE_r6: a caller-set label leaked away here)
-    val prevDesc = sc.getLocalProperty("spark.job.description")
-    // spread a single-file scan across the pool before checkpointing —
-    // the fp fingerprint pass, gram index and byte census below otherwise
-    // all run single-task (Lsh.spreadInput: partition-count-gated, output-
-    // invariant)
-    val d = Lsh.spreadInput(docs).localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
-    // ONE projection over the cached docs computes BOTH per-doc
-    // fingerprints — shingles and simhash — into a single cached table
-    // that feeds banding AND both verify joins. Splitting the families
-    // into independent `minhashDupPairs`/`simhashDupPairs` calls (the
-    // pre-r3 shape) ran the text-processing pass once per family.
-    // NOTE: d/fp checkpoints are LAZY — jobs under this label are the
-    // listing builders' eager sub-actions (substr byte/shard census, hot
-    // censuses, checkpoint materializations they trigger)
-    sc.setJobDescription("graft:listing-prep")
-    val fp = d.select(col("doc_id"),
-        Fns.shingleHashes(col("text"), cfg).as("shingles"),
-        Fns.simhash64(col("text"), cfg).as("simhash"))
-      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
-    val shingled = fp.select("doc_id", "shingles")
-    val simhashes = fp.select("doc_id", "simhash")
-    // The substring family runs on its OWN action thread (guide §2.6,
-    // VERDICT_r6 #3's overlap discipline extended upstream): its eager
-    // byte census (shard sizing) + SA shard scan + gram census have no
-    // dependency on the banding chains, and as serial driver actions they
-    // idled the pool between the banding stages (measured: the facade's
-    // pre-barrier leg ran totalTextBytes -> famCounts back-to-back; the
-    // split overlaps the whole substr chain with the mh/sh listing
-    // materialization — same outputs, the jobs just share the scheduler).
-    // Job descriptions are thread-local, so the phase listener still
-    // attributes each leg correctly. Concurrent first-materialization of
-    // the shared lazy `d` checkpoint is block-manager-safe (one task
-    // computes a partition, the other waits on the block lock).
-    val subFut = scala.concurrent.Future {
-      sc.setJobDescription("graft:listing-substr")
-      val subC = ExactSubstr.substrDupPairs(d, cfg)
-        .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
-      val n = subC.count()
-      sc.setJobDescription(null)
-      (subC, n)
-    }(scala.concurrent.ExecutionContext.global)
-    // MinHash listing splits: cold candidates (downstream-verified) + hot
-    // lanes resolved IN-TASK by the exact-Jaccard verified forest
-    // (Lsh.jaccardLaneVerifiedPairs — clusters identical to the uncapped
-    // enumeration, unlike the unverified hub stars this replaced)
-    val (mhCands, mhHot) = Lsh.minhashListing(
-      Lsh.saltBandKeys(
-        Lsh.minhashBandKeys(Lsh.signatures(shingled, cfg), cfg), cfg),
-      shingled, cfg)
-    val mhc = mhCands.localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
-    val mhHotC = mhHot.localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
-    // SimHash pair listing runs the in-task verified-forest cap (see
-    // Lsh.hammingCappedPairs — clusters identical to uncapped); with
-    // salting disabled the join listing runs instead (task-memory bound)
-    val shc = Lsh.simhashCandidatePairs(
-        Lsh.saltBandKeys(
-          Lsh.simhashBandKeys(simhashes, cfg, carryHash = true), cfg), cfg)
-      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
-    // ONE union action materializes the banding-side candidate checkpoints
-    // while the substr thread runs (serial counts measurably serialized
-    // the families). The counts gate the broadcast semi-restriction: in
-    // the normal web regime (candidates ≪ corpus) the heavy shingle
-    // arrays shuffle only for candidate docs — same discipline as
-    // DedupMain's staged path, output-preserving.
-    sc.setJobDescription("graft:listings-famcounts-barrier")
-    val famCounts = mhc.select(lit("mh").as("fam"))
-      .unionByName(mhHotC.select(lit("mhv").as("fam")))
-      .unionByName(shc.select(lit("sh").as("fam")))
-      .groupBy("fam").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    sc.setJobDescription(prevDesc)
-    val (sub, _) = scala.concurrent.Await.result(
-      subFut, scala.concurrent.duration.Duration.Inf)
+  /** The loud-cap counters of the all×all body, recorded by DedupMain as
+    * metrics rows: pairs the MinHash hot-lane forests skipped as already
+    * connected, verified pairs the SimHash forest suppressed, and pairs the
+    * substring star cap dropped. */
+  private[graft] final case class LoudCaps(minhashLanes: LongAccumulator,
+                                           simhash: LongAccumulator,
+                                           substr: LongAccumulator)
+
+  /** The all×all three-family body → LAZY (a, b, family) verified pairs.
+    *
+    * Inputs are per-doc tables: `docs` (doc_id, text), `shingled` (doc_id,
+    * shingles), `simhashes` (doc_id, simhash), and the raw band keys —
+    * `mhKeys` (doc_id, key), `shKeys` (doc_id, key, simhash). `keysDurable`:
+    * the keys are already a durable table, so salting re-scans them instead
+    * of caching them. `substrShards` pins the substring shard count (None:
+    * sized from the docs' bytes). The listings checkpoint into `scope`.
+    *
+    * Barrier discipline: the substring family runs on its OWN action
+    * thread — its byte census, SA shard scan and gram census do not depend
+    * on the banding chains, and as serial driver actions they idled the
+    * pool between the banding stages. ONE union count materializes the
+    * banded listings meanwhile; its per-family counts gate the broadcast
+    * semi-restriction of the verify joins, so the heavy per-doc arrays
+    * shuffle only for candidate docs. Job labels are thread-local, so each
+    * leg is attributed to its own phase; concurrent first materialization
+    * of a shared lazy checkpoint (the facade's `docs`) is block-manager-safe
+    * — one task computes a partition, the other waits on the block lock. */
+  private[graft] def allPairs(docs: DataFrame, shingled: DataFrame, simhashes: DataFrame,
+                              mhKeys: DataFrame, shKeys: DataFrame, keysDurable: Boolean,
+                              substrShards: Option[Int], caps: Option[LoudCaps],
+                              scope: Scope, cfg: DedupConfig): DataFrame = {
+    val subFut = Future {
+      scope.phase("graft:listing-substr") {
+        val sub = scope.checkpoint(ExactSubstr.substrDupPairs(
+          docs, cfg, substrShards, caps.map(_.substr)))
+        sub.count()
+        sub
+      }
+    }(ExecutionContext.global)
+    val (mhc, mhHotC, shc) = scope.phase("graft:listing-prep") {
+      // MinHash listing splits: cold candidates (downstream-verified) + hot
+      // lanes resolved IN-TASK by the exact-Jaccard verified forest
+      val (mhCands, mhHot) = Lsh.minhashListing(
+        Lsh.saltBandKeys(mhKeys.select("doc_id", "key"), cfg, keysDurable),
+        shingled, cfg, caps.map(_.minhashLanes))
+      // SimHash listing runs the in-task verified-forest cap (join listing
+      // when salting is disabled)
+      val shCands = Lsh.simhashCandidatePairs(
+        Lsh.saltBandKeys(shKeys.select("doc_id", "key", "simhash"), cfg, keysDurable),
+        cfg, caps.map(_.simhash))
+      (scope.checkpoint(mhCands), scope.checkpoint(mhHot), scope.checkpoint(shCands))
+    }
+    val famCounts = scope.phase("graft:listings-famcounts-barrier") {
+      familyCounts(Seq("mh" -> mhc, "mhv" -> mhHotC, "sh" -> shc))
+    }
+    val sub = Await.result(subFut, Duration.Inf)
     val (nMh, nSh) = (famCounts.getOrElse("mh", 0L), famCounts.getOrElse("sh", 0L))
     // hot-lane edges are already exact-verified in-task — only the cold
     // candidates go through the verify join
-    val mh = Lsh.verifyJaccard(
-        mhc, Lsh.restrictToCandidateDocs(shingled, mhc, 2 * nMh), cfg)
-      .unionByName(mhHotC)
-    val sh = Lsh.verifyHamming(
-      shc, Lsh.restrictToCandidateDocs(simhashes, shc, 2 * nSh), cfg)
-    (Lsh.dupPairs(mh, sh, sub), Seq(d, fp, mhc, mhHotC, shc, sub))
+    val mh = verifiedJaccard(mhc, shingled, nMh, cfg).unionByName(mhHotC)
+    Lsh.dupPairs(mh, verifiedHamming(shc, simhashes, nSh, cfg), sub)
   }
+
+  /** The new×all body: verified (a, b, family) pairs with ≥1 NEW doc, from
+    * the new and old raw band keys (doc_id, key) of each banded family.
+    *
+    * Both families go through `Lsh.newVsAllListing`: cold buckets list
+    * new×all candidates for the verify join, hot buckets come back as
+    * census-salted lanes that the exact-verified forests resolve in-task,
+    * seeded with the previous cluster assignment `seed` (Lsh.seedUnion).
+    * One union count materializes every leg; its counts gate the
+    * candidate restriction of the verify joins.
+    *
+    * `shingles` / `simhashes` fetch a family's payload rows (doc_id,
+    * shingles) / (doc_id, simhash) for a set of ids (column `id`: lane
+    * members ∪ candidate endpoints); a superset is fine, every consumer is
+    * an inner join on those ids. `substr` is an optional pre-built lazy
+    * substring leg; `suppressed` counts the loud caps. */
+  private[graft] def newPairs(mhNew: DataFrame, mhOld: DataFrame,
+                              shNew: DataFrame, shOld: DataFrame,
+                              seed: Option[DataFrame],
+                              shingles: DataFrame => DataFrame,
+                              simhashes: DataFrame => DataFrame,
+                              substr: Option[DataFrame],
+                              suppressed: Option[LongAccumulator],
+                              scope: Scope, cfg: DedupConfig): DataFrame = {
+    val (mhCold, mhLanes) = Lsh.newVsAllListing(mhNew, mhOld, cfg.saltMaxBucket, suppressed)
+    val (shCold, shLanes) = Lsh.newVsAllListing(shNew, shOld, cfg.saltMaxBucket, suppressed)
+    val mhc = scope.checkpoint(mhCold.distinct())
+    val shc = scope.checkpoint(shCold.distinct())
+    // lanes feed the payload ids AND the lane join: checkpoint once
+    val mhLanesS = scope.checkpoint(Lsh.withLaneSeeds(mhLanes, seed))
+    val shLanesS = scope.checkpoint(Lsh.withLaneSeeds(shLanes, seed))
+    def ids(lanes: DataFrame, cands: DataFrame): DataFrame =
+      lanes.select(col("doc_id").as("id"))
+        .unionByName(cands.select(col("a").as("id")))
+        .unionByName(cands.select(col("b").as("id")))
+    // ONE payload fetch per family feeds the lane join AND the verify join
+    val shTbl = shingles(ids(mhLanesS, mhc))
+    val simTbl = simhashes(ids(shLanesS, shc))
+    val mhLaneV = scope.checkpoint(Lsh.jaccardIncrementalLanePairs(
+      mhLanesS.join(shTbl, "doc_id"), cfg.jaccardThreshold, suppressed))
+    val shLaneV = scope.checkpoint(Lsh.hammingIncrementalLanePairs(
+      shLanesS.join(simTbl, "doc_id"), cfg.hammingThreshold, suppressed))
+    val sub = substr.map(scope.checkpoint(_))
+    val famCounts = familyCounts(
+      Seq("mh" -> mhc, "sh" -> shc, "mhv" -> mhLaneV, "shv" -> shLaneV) ++
+        sub.map("sub" -> _))
+    val (nMh, nSh) = (famCounts.getOrElse("mh", 0L), famCounts.getOrElse("sh", 0L))
+    val mh = verifiedJaccard(mhc, shTbl, nMh, cfg).select("a", "b").unionByName(mhLaneV)
+    val sh = verifiedHamming(shc, simTbl, nSh, cfg).select("a", "b").unionByName(shLaneV)
+    val spark = mhNew.sparkSession
+    import spark.implicits._
+    Lsh.dupPairs(mh, sh, sub.getOrElse(Seq.empty[(Long, Long)].toDF("a", "b")))
+  }
+
+  /** Exact-Jaccard verify of `nCands` candidate pairs against a per-doc
+    * shingle table restricted to the candidates' docs first (count-gated
+    * broadcast LeftSemi, `Lsh.restrictToCandidateDocs`): the heavy arrays
+    * shuffle only for candidate docs — the normal web regime. */
+  private[graft] def verifiedJaccard(cands: DataFrame, shingled: DataFrame,
+                                     nCands: Long, cfg: DedupConfig): DataFrame =
+    Lsh.verifyJaccard(cands, Lsh.restrictToCandidateDocs(shingled, cands, 2 * nCands), cfg)
+
+  /** The exact-Hamming analog of `verifiedJaccard`. */
+  private[graft] def verifiedHamming(cands: DataFrame, simhashes: DataFrame,
+                                     nCands: Long, cfg: DedupConfig): DataFrame =
+    Lsh.verifyHamming(cands, Lsh.restrictToCandidateDocs(simhashes, cands, 2 * nCands), cfg)
+
+  /** Row count per named table, from ONE union action — the tables'
+    * stages overlap across the executor pool instead of serializing. */
+  private def familyCounts(tables: Seq[(String, DataFrame)]): Map[String, Long] =
+    tables.map { case (fam, df) => df.select(lit(fam).as("fam")) }
+      .reduce(_ unionByName _)
+      .groupBy("fam").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** The facade's feed of the all×all body: the input spread across the
+    * pool (Lsh.spreadInput — a single-file scan otherwise runs every
+    * fingerprint pass single-task), ONE projection computing both per-doc
+    * fingerprints into one cached table, and band keys derived from it.
+    * Returns the lazy verified-pair plan; the checkpoints live in `scope`. */
+  private[graft] def dupPairsPlan(docs: DataFrame, cfg: DedupConfig, scope: Scope): DataFrame =
+    scope.phase("graft:listing-prep") {
+      val d = scope.checkpoint(Lsh.spreadInput(docs))
+      val fp = scope.checkpoint(d.select(col("doc_id"),
+        Fns.shingleHashes(col("text"), cfg).as("shingles"),
+        Fns.simhash64(col("text"), cfg).as("simhash")))
+      val shingled = fp.select("doc_id", "shingles")
+      val simhashes = fp.select("doc_id", "simhash")
+      allPairs(d, shingled, simhashes,
+        Lsh.minhashBandKeys(Lsh.signatures(shingled, cfg), cfg),
+        Lsh.simhashBandKeys(simhashes, cfg, carryHash = true),
+        keysDurable = false, substrShards = None, caps = None, scope, cfg)
+    }
 
   /** Family-tagged verified duplicate pairs (a, b, family).
     *
-    * EAGER: materializes the (small) pair table, then releases the five
-    * intermediate block sets — repeated facade calls in one session (bench
-    * loops, notebooks) otherwise pile up executor storage until eviction,
-    * the block-pressure class the CC round lifecycle already fixed. The
-    * returned checkpoint depends on nothing unpersisted here. */
+    * EAGER: materializes the (small) pair table, then releases every
+    * intermediate block — repeated facade calls in one session (bench
+    * loops, notebooks) otherwise pile up executor storage until eviction.
+    * The returned checkpoint depends on nothing released here. */
   def dupPairs(docs: DataFrame, cfg: DedupConfig = DedupConfig.test): DataFrame = {
-    val (pairs, intermediates) = dupPairsPlan(docs, cfg)
-    val sc = docs.sparkSession.sparkContext
-    val prevDesc = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription("graft:verify-union-ckpt")
-    val out =
-      try pairs.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-      finally sc.setJobDescription(prevDesc)
-    intermediates.foreach { df =>
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(blocking = false))
-    }
-    out
+    val scope = new Scope(docs.sparkSession)
+    try {
+      val pairs = dupPairsPlan(docs, cfg, scope)
+      scope.phase("graft:verify-union-ckpt") { scope.result(pairs) }
+    } finally scope.release()
   }
 
   /** Cluster table (doc_id, cluster_id, cluster_size, is_canonical) for

@@ -14,8 +14,14 @@ object Sessions {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.shuffle.partitions", (2 * cores).toString)
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors): SparkSession = {
-    val s = builder(cores)
+  /** Cores for the tool mains: `SPARK_GRAFT_CPUS` when set, else the host's. */
+  def toolCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** A local[cores] session, UI off, WARN logs; `conf` overrides the
+    * builder's settings. */
+  def local(cores: Int, conf: (String, String)*): SparkSession = {
+    val s = conf.foldLeft(builder(cores)) { case (b, (k, v)) => b.config(k, v) }
       .master(s"local[$cores]")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

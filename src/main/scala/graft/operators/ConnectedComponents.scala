@@ -70,18 +70,6 @@ object ConnectedComponents {
    * cluster_id = min doc_id of the component. Only nodes that appear in at
    * least one pair are emitted (singletons are not duplicates).
    */
-  /** The RDD a checkpointed Dataset wraps (its analyzed plan is a
-    * LogicalRDD) — the handle whose blocks the round lifecycle below
-    * unpersists. Tracking the handle directly keeps the lifecycle scoped to
-    * THIS iteration's own checkpoints: diffing the session-global
-    * persistent-RDD registry (the pre-r3 approach) captured — and
-    * unpersisted mid-flight — RDDs persisted by any concurrent job in the
-    * same session (e.g. the streaming foreachBatch bridge). */
-  private def checkpointedRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-
   /** Edge-count gate for the single-task fast path: 4M edges ≈ 200 MB of
     * transient primitive arrays in ONE task — the same per-task working-set
     * budget the suffix-array shards run at (`ExactSubstr.TargetShardBytes`
@@ -120,13 +108,16 @@ object ConnectedComponents {
     // Checkpoint-block lifecycle: each round's edge blocks are only needed
     // until the NEXT round materializes — without explicit unpersist the
     // blocks of every round pile up until GC notices (at 10^7+ edges ×
-    // O(log n) rounds that is an OOM, observed at 960k docs).
+    // O(log n) rounds that is an OOM, observed at 960k docs). Releasing
+    // each round's OWN checkpoint handle (graft.Scope.unpersist) keeps the
+    // lifecycle scoped to this iteration: diffing the session-global
+    // persistent-RDD registry (the pre-r3 approach) captured — and
+    // unpersisted mid-flight — RDDs of any concurrent job in the session.
     var edges = pairs
       .select(col("a").as("src"), col("b").as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct()
       .localCheckpoint()
-    var prevRdd = checkpointedRdd(edges)
 
     var (prevN, prevH) = fingerprint(edges)
     // Strategy switch, AQE-style (the `restrictToCandidateDocs` pattern):
@@ -162,8 +153,7 @@ object ConnectedComponents {
         else stepped.localCheckpoint(false)
       val (n, h) = fingerprint(next)
       // the successor is materialized — the previous round's blocks are dead
-      prevRdd.foreach(_.unpersist(blocking = false))
-      prevRdd = checkpointedRdd(next)
+      graft.Scope.unpersist(edges)
       converged = n == prevN && h == prevH
       prevN = n; prevH = h
       edges = next

@@ -1,10 +1,10 @@
 package graft.run
 
-import graft.DedupConfig
+import graft.{Dedup, DedupConfig, Scope}
 import graft.functions.Fns
 import graft.operators.{ConnectedComponents, ExactSubstr, Lsh}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -119,7 +119,7 @@ object DedupMain {
     // shingles + signatures are the tables every verify join (and every
     // incremental re-run) re-joins on doc_id — bucketing them by doc_id
     // makes those joins Exchange-free on this (heavy) side
-    val buckets = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val buckets = spark.conf.get("spark.sql.shuffle.partitions").toInt
     def stageBucketed(name: String)(build: => DataFrame): DataFrame =
       Checkpoint.stageBucketed(spark, root, name, cfg, runId, buckets, "doc_id")(build)
     def stageBucketedDays(name: String)(build: DataFrame => DataFrame): DataFrame =
@@ -205,96 +205,42 @@ object DedupMain {
     val dupKey = Checkpoint.stageKey(cfg, substrKey)
     val dupDir = s"$root/dup_pairs"
     val prevDup = Checkpoint.readManifest(spark, root, "dup_pairs")
-    val substrDropped = spark.sparkContext.longAccumulator("substr_starcap_dropped_pairs")
-    val simhashSuppressed = spark.sparkContext.longAccumulator("simhash_starcap_suppressed_pairs")
-    val minhashLaneSuppressed = spark.sparkContext.longAccumulator("minhash_lane_suppressed_pairs")
+    // loud caps — counted by the listing operators, never silent
+    val caps = Dedup.LoudCaps(
+      minhashLanes = spark.sparkContext.longAccumulator("minhash_lane_suppressed_pairs"),
+      simhash = spark.sparkContext.longAccumulator("simhash_starcap_suppressed_pairs"),
+      substr = spark.sparkContext.longAccumulator("substr_starcap_dropped_pairs"))
+    // the run's intermediate blocks, released once its stages are written
+    val scope = new Scope(spark)
 
-    /** Full-corpus three-family build → LAZY (a, b, family) plan. Consumes
-      * the persisted raw band_keys stage (building it when absent), salts
-      * at listing time, and records the loud-cap drop estimates
+    /** Full-corpus three-family build → LAZY (a, b, family) plan: the
+      * shared all×all body over the stage tables. Consumes the persisted
+      * raw band_keys stage (building it when absent), salts at listing
+      * time, and records the loud-cap drop estimates
       * (Lsh.saltedDropEstimate contract). */
-    def buildAllPairs(): DataFrame = {
-      // the band index is folded into `key` (Lsh.minhashBandKeys /
-      // simhashBandKeys), so the bucket identity downstream is (key, salt).
-      // fmt=2: the day-less stage now stores RAW keys (salt applied on
-      // read) — folding the format into the resume key makes an old-format
-      // root recompute instead of failing on the changed schema.
+    def allPairs(): DataFrame = {
+      // fmt=2: the day-less stage stores RAW keys (salt applied on read) —
+      // folding the format into the resume key makes an old-format root
+      // recompute instead of failing on the changed schema.
       val rawKeys = bandKeysDay.getOrElse(
         Checkpoint.stage(spark, root, "band_keys", cfg, runId,
           s"$inputKey;fmt=2")(rawBandKeys(signatures)))
+      def family(fam: String) = rawKeys.where(col("family") === fam)
       Seq("minhash", "simhash").foreach { fam =>
         Metrics.append(spark, root, runId, s"salted_drop_est_$fam",
-          Lsh.saltedDropEstimate(rawKeys.where(col("family") === fam), cfg),
-          0L, resumed = false)
+          Lsh.saltedDropEstimate(family(fam), cfg), 0L, resumed = false)
       }
-      val mhSalted = Lsh.saltBandKeys(
-        rawKeys.where(col("family") === "minhash").select("doc_id", "key"),
-        cfg, materialized = true)
-      // is_hot MUST survive into the listing: it keys the star-vs-clique
-      // discipline — dropping it would run the full self-join over hot salt
-      // lanes (quadratic boilerplate blowup) and diverge from the Dedup
-      // facade at the same configHash. (Absent only when salting is off.)
-      // Hot lanes come back ALREADY exact-verified (in-task Jaccard forest,
-      // joined against the doc_id-bucketed shingled stage).
-      val mhCols = Seq("doc_id", "key", "salt") ++
-        (if (mhSalted.columns.contains("is_hot")) Seq("is_hot") else Nil)
-      val (mhCands, mhHot) = Lsh.minhashListing(
-        mhSalted.select(mhCols.map(col): _*),
-        shingled.select("doc_id", "shingles"), cfg, Some(minhashLaneSuppressed))
-      val mhc = mhCands
-        .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      val mhHotC = mhHot
-        .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      // simhash pair listing runs the in-task verified-forest cap
-      // (Lsh.hammingCappedPairs — clusters identical to uncapped; join
-      // listing when salting is off); the suppressed-pair count is EXACT,
-      // recorded after the stage action
-      val shc = Lsh.simhashCandidatePairs(
-          Lsh.saltBandKeys(
-            rawKeys.where(col("family") === "simhash")
-              .select("doc_id", "key", "simhash"),
-            cfg, materialized = true)
-            .select("doc_id", "key", "salt", "simhash"),
-          cfg, Some(simhashSuppressed))
-        .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      val sub = ExactSubstr.substrDupPairs(docs, cfg, Some(substrShards), Some(substrDropped))
-        .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      // ONE action materializes both lazy candidate checkpoints AND the
-      // independent substring family: the union job runs all three
-      // families' stages over the shared executor pool concurrently
-      // (separate count() actions serialized them — observed stage-gap at
-      // 960k docs; the suffix-array scan has no dependency on the banding
-      // chains), and the per-family counts gate the broadcast
-      // semi-restriction below.
-      val famCounts = mhc.select(lit("mh").as("fam"))
-        .unionByName(mhHotC.select(lit("mhv").as("fam")))
-        .unionByName(shc.select(lit("sh").as("fam")))
-        .unionByName(sub.select(lit("sub").as("fam")))
-        .groupBy("fam").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val (nMh, nSh) = (famCounts.getOrElse("mh", 0L), famCounts.getOrElse("sh", 0L))
-      // hot-lane edges are already exact-verified in-task — only the cold
-      // candidates go through the verify join
-      val mh = Lsh.verifyJaccard(
-          mhc, Lsh.restrictToCandidateDocs(shingled, mhc, 2 * nMh), cfg)
-        .unionByName(mhHotC)
-      val sh = Lsh.verifyHamming(
-        shc, Lsh.restrictToCandidateDocs(
-          signatures.select("doc_id", "simhash"), shc, 2 * nSh), cfg)
-      Lsh.dupPairs(mh, sh, sub)
+      Dedup.allPairs(docs, shingled.select("doc_id", "shingles"),
+        signatures.select("doc_id", "simhash"), family("minhash"), family("simhash"),
+        keysDurable = true, Some(substrShards), Some(caps), scope, cfg)
     }
     def pairMetricsAfterBuild(): Unit = {
       Metrics.append(spark, root, runId, "substr_shards", substrShards.toLong, 0L, resumed = false)
-      Metrics.append(spark, root, runId, "substr_starcap_dropped_pairs",
-        substrDropped.value, 0L, resumed = false)
-      // exact (task-counted) redundant-for-connectivity verified pairs the
-      // simhash forest suppressed — loud cap, never silent
-      Metrics.append(spark, root, runId, "simhash_starcap_suppressed_pairs",
-        simhashSuppressed.value, 0L, resumed = false)
-      // minhash hot lanes: pairs skipped as already-connected through
-      // verified edges (upper bound on redundant verified pairs) — loud
-      Metrics.append(spark, root, runId, "minhash_lane_suppressed_pairs",
-        minhashLaneSuppressed.value, 0L, resumed = false)
+      Seq("substr_starcap_dropped_pairs" -> caps.substr,
+          "simhash_starcap_suppressed_pairs" -> caps.simhash,
+          "minhash_lane_suppressed_pairs" -> caps.minhashLanes).foreach { case (name, acc) =>
+        Metrics.append(spark, root, runId, name, acc.value, 0L, resumed = false)
+      }
     }
 
     val inDays: Seq[java.sql.Timestamp] =
@@ -308,7 +254,7 @@ object DedupMain {
         // day-less inputs keep the whole-stage gate: any input change
         // (docs_rows / shard count in the key) recomputes from scratch
         val resumed = prevDup.exists(_.configHash == dupKey)
-        val out = Checkpoint.stage(spark, root, "dup_pairs", cfg, runId, substrKey)(buildAllPairs())
+        val out = Checkpoint.stage(spark, root, "dup_pairs", cfg, runId, substrKey)(allPairs())
         if (!resumed) pairMetricsAfterBuild()
         out
       } else {
@@ -387,15 +333,9 @@ object DedupMain {
               .select("a", "b")
             val prevEdges = seed.map(pa =>
               pa.select(col("doc_id").as("a"), col("cluster_id").as("b")))
-            val next = ConnectedComponents.assign(
-                prevEdges.fold(dayPairs)(_.unionByName(dayPairs)))
-              .localCheckpoint(true,
-                org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-            seedCkpt.foreach { old =>
-              old.queryExecution.analyzed.collectFirst {
-                case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-              }.foreach(_.unpersist(blocking = false))
-            }
+            val next = scope.checkpoint(ConnectedComponents.assign(
+                prevEdges.fold(dayPairs)(_.unionByName(dayPairs))), eager = true)
+            seedCkpt.foreach(scope.release)
             seedCkpt = Some(next)
             seed = Some(next)
           }
@@ -421,11 +361,7 @@ object DedupMain {
             // not after the last day — the clusters stage rebuild covers it
             if (i < pending.size - 1) refreshSeed(Seq(d))
           }
-          seedCkpt.foreach { old =>
-            old.queryExecution.analyzed.collectFirst {
-              case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-            }.foreach(_.unpersist(blocking = false))
-          }
+          seedCkpt.foreach(scope.release)
           val out = spark.read.parquet(dupDir)
           val wallMs = (System.nanoTime() - t0) / 1000000L
           Checkpoint.writeManifest(spark, root, Checkpoint.Manifest("dup_pairs",
@@ -437,7 +373,7 @@ object DedupMain {
         } else {
           val t0 = System.nanoTime()
           val dd = docs.select(col("doc_id"), col("warc_day"))
-          val stamped = buildAllPairs()
+          val stamped = allPairs()
             .join(dd.select(col("doc_id").as("a"), col("warc_day").as("da")), "a")
             .join(dd.select(col("doc_id").as("b"), col("warc_day").as("db")), "b")
             .withColumn("warc_day", greatest(col("da"), col("db")))
@@ -500,9 +436,8 @@ object DedupMain {
         prevCovered match {
           case Some(cov) if cov.nonEmpty && cov.subsetOf(inDays.toSet) =>
             // eager: the stage write overwrites the dir being read
-            val prevEdges = spark.read.parquet(s"$root/clusters")
-              .select(col("doc_id").as("a"), col("cluster_id").as("b"))
-              .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+            val prevEdges = scope.checkpoint(spark.read.parquet(s"$root/clusters")
+              .select(col("doc_id").as("a"), col("cluster_id").as("b")), eager = true)
             val newDays = inDays.filterNot(cov.contains)
             val newPairs = dupPairs
               .where(col("warc_day").isin(newDays.map(x => x: Any): _*))
@@ -524,10 +459,12 @@ object DedupMain {
         .map(_.configHash).getOrElse("")
       Checkpoint.stage(spark, root, "deduped", cfg, runId,
         s"clusters=${md5(clusterKey)};score=${md5(scoreExpr)}") {
-        graft.Dedup.keepBest(docs,
+        Dedup.keepBest(docs,
           clustersOut.select("doc_id", "cluster_id"), expr(scoreExpr))
       }
     }
+    // every stage above is written and read back: no plan reads the blocks
+    scope.release()
     clustersOut
   }
 
@@ -546,78 +483,39 @@ object DedupMain {
                              clustersSeed: Option[DataFrame],
                              ctxDays: Seq[java.sql.Timestamp],
                              d: java.sql.Timestamp, substrShards: Int): Unit = {
-    val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     val t0 = System.nanoTime()
     // loud-cap accounting for the appended day (estimates, counted by the
     // hot censuses of all three routes — never silent)
     val daySuppressed = spark.sparkContext.longAccumulator("append_suppressed_pairs")
     val isNew = col("warc_day") === lit(d)
     val isOld = col("warc_day").isin(ctxDays.map(x => x: Any): _*)
-    val sigsAll = signatures.where(isNew || isOld)
-    val shAll = shingled.where(isNew || isOld)
     // band keys come from storage on BOTH sides (r4 re-derived and block-
     // cached corpus×52 keys from signatures per appended day — measured
     // ~80% of the append wall); each leg of the new×all operator re-scans
     // the day-pruned, key-bucketed table instead of caching it
-    def keys(side: org.apache.spark.sql.Column, fam: String) =
+    def keys(side: Column, fam: String) =
       bandKeys.where(side && col("family") === fam).select("doc_id", "key")
     // cap = saltMaxBucket for BOTH families: below it the new×all listing
     // is exact (same pair set as the batch path's cold cliques restricted
     // to new-involving pairs); above it, the census-salted lanes use the
     // IDENTICAL salt formula as the batch build and are resolved in-task
-    // by the family's exact-verified forest — no unverified edge anywhere
-    // (a pairStarCap hub star here split clusters at 240k; r4's hub
-    // spokes were the same class). Touched-lane merges are usually
-    // new-involving but NOT exclusively: a lane may expose an old↔old
-    // drift link (census growth co-locating a pair no earlier lane saw),
-    // emitted deliberately (added true connectivity). The caller refreshes
-    // the seed between pending days, so a link emitted in day k can never
-    // re-merge — and so never re-emit — in day k+1 (Lsh.seedUnion
-    // documents the soundness argument).
-    val (mhCold, mhLanes) = Lsh.newVsAllListing(
-      keys(isNew, "minhash"), keys(isOld, "minhash"), cfg.saltMaxBucket,
-      Some(daySuppressed))
-    val (shCold, shLanes) = Lsh.newVsAllListing(
-      keys(isNew, "simhash"), keys(isOld, "simhash"), cfg.saltMaxBucket,
-      Some(daySuppressed))
-    val mhc = mhCold.distinct().localCheckpoint(false, ser)
-    val shc = shCold.distinct().localCheckpoint(false, ser)
-    // lane payloads join from the doc_id-bucketed stage tables, seeded
-    // with the previous cluster assignment; emitted lane edges are
-    // ALREADY exact-verified (bypass the verify joins)
-    val mhLaneV = Lsh.jaccardIncrementalLanePairs(
-        Lsh.withLaneSeeds(mhLanes, clustersSeed)
-          .join(shAll.select("doc_id", "shingles"), "doc_id"),
-        cfg.jaccardThreshold, Some(daySuppressed))
-      .localCheckpoint(false, ser)
-    val shLaneV = Lsh.hammingIncrementalLanePairs(
-        Lsh.withLaneSeeds(shLanes, clustersSeed)
-          .join(sigsAll.select("doc_id", "simhash"), "doc_id"),
-        cfg.hammingThreshold, Some(daySuppressed))
-      .localCheckpoint(false, ser)
-    val sub = ExactSubstr.substrDupPairsIncremental(
-        docs.where(isNew), docs.where(isOld), cfg, substrShards,
-        Some(daySuppressed))
-      .localCheckpoint(false, ser)
-    // one union action: the families overlap, counts gate the verify
-    // restriction — the full-build discipline at day scale
-    val famCounts = mhc.select(lit("mh").as("fam"))
-      .unionByName(shc.select(lit("sh").as("fam")))
-      .unionByName(mhLaneV.select(lit("mhv").as("fam")))
-      .unionByName(shLaneV.select(lit("shv").as("fam")))
-      .unionByName(sub.select(lit("sub").as("fam")))
-      .groupBy("fam").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val (nMh, nSh) = (famCounts.getOrElse("mh", 0L), famCounts.getOrElse("sh", 0L))
-    val mh = Lsh.verifyJaccard(
-        mhc, Lsh.restrictToCandidateDocs(
-          shAll.select("doc_id", "shingles"), mhc, 2 * nMh), cfg)
-      .select("a", "b").unionByName(mhLaneV)
-    val sh = Lsh.verifyHamming(
-        shc, Lsh.restrictToCandidateDocs(
-          sigsAll.select("doc_id", "simhash"), shc, 2 * nSh), cfg)
-      .select("a", "b").unionByName(shLaneV)
-    Lsh.dupPairs(mh, sh, sub)
+    // by the family's exact-verified forest — no unverified edge anywhere.
+    // Touched-lane merges are usually new-involving but NOT exclusively: a
+    // lane may expose an old↔old drift link (census growth co-locating a
+    // pair no earlier lane saw), emitted deliberately (added true
+    // connectivity). The caller refreshes the seed between pending days,
+    // so a link emitted in day k can never re-merge — and so never
+    // re-emit — in day k+1 (Lsh.seedUnion documents the soundness
+    // argument). Payloads are the day-pruned doc_id-bucketed stages.
+    val scope = new Scope(spark)
+    Dedup.newPairs(
+        keys(isNew, "minhash"), keys(isOld, "minhash"),
+        keys(isNew, "simhash"), keys(isOld, "simhash"), clustersSeed,
+        _ => shingled.where(isNew || isOld).select("doc_id", "shingles"),
+        _ => signatures.where(isNew || isOld).select("doc_id", "simhash"),
+        Some(ExactSubstr.substrDupPairsIncremental(
+          docs.where(isNew), docs.where(isOld), cfg, substrShards, Some(daySuppressed))),
+        Some(daySuppressed), scope, cfg)
       .withColumn("warc_day", lit(d))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
@@ -628,11 +526,7 @@ object DedupMain {
     Metrics.append(spark, root, runId, "append_suppressed_pairs_day",
       daySuppressed.value, 0L, resumed = false)
     Lineage.appendDays(spark, root, runId, "dup_pairs", cfg.configHash, Seq(d -> n))
-    Seq(mhc, shc, mhLaneV, shLaneV, sub).foreach { df =>
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(blocking = false))
-    }
+    scope.release()
   }
 
   def main(args: Array[String]): Unit = {
@@ -644,17 +538,11 @@ object DedupMain {
     val (kbArgs, cfgArgs) = args.drop(2).partition(_.startsWith("keepBest="))
     val keepBest = kbArgs.lastOption.map(_.split("=", 2)(1))
     val cfg = parseConfig(cfgArgs.toSeq)
-    val builder = SparkSession.builder()
-      .appName("graft-dedup")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+    val cores = Runtime.getRuntime.availableProcessors
+    val builder = graft.Sessions.builder(cores).appName("graft-dedup")
     // spark-submit injects spark.master; default to local[cores] otherwise
     val spark = (if (sys.props.contains("spark.master")) builder
-                 else builder.master(s"local[${Runtime.getRuntime.availableProcessors}]")
-                   .config("spark.sql.shuffle.partitions",
-                           (2 * Runtime.getRuntime.availableProcessors).toString))
-      .getOrCreate()
+                 else builder.master(s"local[$cores]")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val clusters = run(spark, inputRef, root, cfg, keepBest = keepBest)
     val nClusters = clusters.select("cluster_id").distinct().count()

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.DedupConfig
+import graft.{Dedup, DedupConfig, Scope}
 import graft.functions.Fns
 import graft.operators.{ConnectedComponents, Lsh}
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -258,8 +258,9 @@ object StreamingDedup {
       case (t, _) => throw new IllegalArgumentException(s"unknown state table $t")
     }
 
+  /** One resident entry: its tables' checkpoint blocks belong to `scope`. */
   private final case class CachedBatch(id: Long, tables: Map[String, DataFrame],
-                                       span: Int = 1,
+                                       scope: Scope, span: Int = 1,
                                        indexes: Map[String, TableIndex] = Map.empty)
   private val stateCache =
     scala.collection.mutable.LinkedHashMap[String, Vector[CachedBatch]]()
@@ -269,12 +270,20 @@ object StreamingDedup {
   /** Roots cached concurrently; beyond this the least-recently-used root's
     * blocks are released (tests churn many tiny roots in one JVM). */
   private val MaxCachedRoots = 2
+  /** Resident-state entries store DESERIALIZED: the state is re-SCANNED by
+    * ~6 consumers per micro-batch, and a _SER level pays a full object
+    * deserialization of the whole state per consumer per batch — measured
+    * as a steadily growing per-batch wall. Deserialized blocks trade ~2-3x
+    * memory (the state-store cost, spills to executor-local disk under
+    * pressure) for scan-speed reads. */
+  private val stateLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
   private def unpersistBatch(cb: CachedBatch): Unit = {
-    // Try: an evicted root may belong to an already-stopped session
-    // (suite teardown) — releasing dead blocks must not fail the live one
+    // both releases are best-effort: an evicted root may belong to an
+    // already-stopped session (suite teardown) — releasing dead blocks
+    // must not fail the live one
     cb.indexes.values.foreach(_.release())
-    cb.tables.values.foreach(df => scala.util.Try(unpersistCheckpoint(df)))
+    cb.scope.release()
   }
 
   /** Drop a root's resident state (blocks released). The next batch on
@@ -290,7 +299,7 @@ object StreamingDedup {
     * the per-batch entries; callers assemble old/new/full views by
     * filtering ENTRIES (no batch_id column needed row-side). */
   private def residentState(spark: org.apache.spark.sql.SparkSession, root: String,
-                            batchId: Long, newRows: Map[String, DataFrame])
+                            batchId: Long, newRows: Map[String, DataFrame], newScope: Scope)
       : Vector[CachedBatch] = synchronized {
     val prevNewest = committedSnapshots(spark, s"$root/keys")
       .filter(_ != batchId).reduceOption(_ max _)
@@ -314,10 +323,10 @@ object StreamingDedup {
         // using its fresh handles either way)
         unpersistBatch(v.last)
         v.dropRight(1) :+
-          CachedBatch(batchId, newRows, v.last.span, indexesFor(newRows))
+          CachedBatch(batchId, newRows, newScope, v.last.span, indexesFor(newRows))
       case Some(v) if v.nonEmpty && prevNewest.contains(v.last.id) =>
         lastStateSource = "cache-extend"
-        binaryMerge(v :+ CachedBatch(batchId, newRows, 1, indexesFor(newRows)))
+        binaryMerge(spark, v :+ CachedBatch(batchId, newRows, newScope, 1, indexesFor(newRows)))
       case other =>
         // fresh JVM, evicted root, or a root recreated under a live cache
         // — the one O(state) read left: recovery. Prior batches collapse
@@ -326,16 +335,15 @@ object StreamingDedup {
         lastStateSource = "rebuild"
         other.foreach(_.foreach(unpersistBatch))
         val prior = prevNewest.map { pn =>
+          val rebuilt = new Scope(spark)
           val tabs = StateTables.map { t =>
-            t -> spark.read.parquet(s"$root/$t")
-              .where(col("batch_id") =!= batchId).drop("batch_id")
-              .localCheckpoint(false,
-                org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            t -> rebuilt.checkpoint(spark.read.parquet(s"$root/$t")
+              .where(col("batch_id") =!= batchId).drop("batch_id"), level = stateLevel)
           }.toMap
-          CachedBatch(pn, tabs, span = committedSnapshots(spark, s"$root/keys")
+          CachedBatch(pn, tabs, rebuilt, span = committedSnapshots(spark, s"$root/keys")
             .count(_ != batchId), indexes = indexesFor(tabs))
         }.toVector
-        prior :+ CachedBatch(batchId, newRows, 1, indexesFor(newRows))
+        prior :+ CachedBatch(batchId, newRows, newScope, 1, indexesFor(newRows))
     }
     stateCache.remove(root) // re-insert moves the root to LRU tail
     stateCache.put(root, next)
@@ -352,16 +360,17 @@ object StreamingDedup {
     * by id, so the current batch must stay its own entry until the next
     * batch makes it old. Width after n batches ≈ popcount(n)+1 ≤ log2(n)+1;
     * each row re-checkpoints O(log n) times total. */
-  private def binaryMerge(v: Vector[CachedBatch]): Vector[CachedBatch] = {
+  private def binaryMerge(spark: org.apache.spark.sql.SparkSession,
+                          v: Vector[CachedBatch]): Vector[CachedBatch] = {
     var old = v.dropRight(1)
     while (old.size >= 2 && old(old.size - 2).span == old(old.size - 1).span) {
       val (a, b) = (old(old.size - 2), old(old.size - 1))
+      val scope = new Scope(spark)
       val mergedTabs = StateTables.map { t =>
-        t -> a.tables(t).unionByName(b.tables(t))
-          .localCheckpoint(true,
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        t -> scope.checkpoint(a.tables(t).unionByName(b.tables(t)),
+          eager = true, stateLevel)
       }.toMap
-      val merged = CachedBatch(math.max(a.id, b.id), mergedTabs,
+      val merged = CachedBatch(math.max(a.id, b.id), mergedTabs, scope,
         a.span + b.span, indexesFor(mergedTabs))
       unpersistBatch(a); unpersistBatch(b)
       old = old.dropRight(2) :+ merged
@@ -562,7 +571,6 @@ object StreamingDedup {
   private def processBatchAttempt(batch: DataFrame, batchId: Long, cfg: DedupConfig,
                                   root: String, compactEvery: Int): Unit = {
     val spark = batch.sparkSession
-    val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     // refuse incompatible state, recover any torn compaction, and fold the
     // batch-dir backlog before reading state
     ensureStateFormat(spark, root)
@@ -593,19 +601,15 @@ object StreamingDedup {
         committedSnapshots(spark, s"$root/keys").count(_ < batchId) >= compactEvery) {
       compactState(spark, root, batchId)
     }
-    // resident-state entries store DESERIALIZED (MEMORY_AND_DISK): the
-    // state is re-SCANNED by ~6 consumers per micro-batch, and a _SER
-    // level pays a full object deserialization of the whole state per
-    // consumer per batch — measured as a steadily growing per-batch wall.
-    // Deserialized blocks trade ~2-3x memory (the state-store cost, spills
-    // to executor-local disk under pressure) for scan-speed reads.
-    val stateLvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sh = Lsh.shingled(batch, cfg).localCheckpoint(true, stateLvl)
-    val sims = Lsh.simhashes(batch, cfg).localCheckpoint(true, stateLvl)
-    val newKeys = Lsh.minhashBandKeys(Lsh.signatures(sh, cfg), cfg)
-      .select("doc_id", "key").localCheckpoint(true, stateLvl)
-    val newKeysSh = Lsh.simhashBandKeys(sims, cfg)
-      .select("doc_id", "key").localCheckpoint(true, stateLvl)
+    // this batch's resident-state entry: its blocks belong to the cache
+    // (released at fold/evict), not to this batch's transient scope
+    val state = new Scope(spark)
+    def stateTable(df: DataFrame) = state.checkpoint(df, eager = true, stateLevel)
+    val sh = stateTable(Lsh.shingled(batch, cfg))
+    val sims = stateTable(Lsh.simhashes(batch, cfg))
+    val newKeys = stateTable(
+      Lsh.minhashBandKeys(Lsh.signatures(sh, cfg), cfg).select("doc_id", "key"))
+    val newKeysSh = stateTable(Lsh.simhashBandKeys(sims, cfg).select("doc_id", "key"))
     // idempotent state append: this batch owns its partition directory
     sh.write.mode("overwrite").parquet(s"$root/shingled/batch_id=$batchId")
     sims.write.mode("overwrite").parquet(s"$root/simhashes/batch_id=$batchId")
@@ -617,7 +621,7 @@ object StreamingDedup {
     // state), not the stream's lifetime
     val resident = residentState(spark, root, batchId, Map(
       "keys" -> newKeys, "keys_sh" -> newKeysSh,
-      "shingled" -> sh, "simhashes" -> sims))
+      "shingled" -> sh, "simhashes" -> sims), state)
     // Every state read below is a POINT LOOKUP against the entries'
     // hash-map indexes (VERDICT_r6 #1): resident rows touched per batch =
     // probes + matches — the increment's keys and the candidates' doc ids
@@ -650,70 +654,22 @@ object StreamingDedup {
                      probed, matched, probeSets)
           .map { case (d, v) => (d, v(0)) })
         .toDF("doc_id", "simhash")
-    // new × all bucket listings — the shared incremental operator
-    // (Lsh.newVsAllListing, which derives all = new ∪ old internally):
-    // every emitted pair involves ≥1 new doc → no pair repeats across
-    // batches. Hot buckets come back as census-salted lanes (the batch
-    // salt formula) resolved in-task by the family's exact-verified
-    // forest — no unverified edges, matching the batch discipline.
-    val (mhCold, mhLanes) = Lsh.newVsAllListing(
-      newKeys, oldKeysLookup("keys", newKeys), cfg.saltMaxBucket)
-    val (shColdL, shLanes) = Lsh.newVsAllListing(
-      newKeysSh, oldKeysLookup("keys_sh", newKeysSh), cfg.saltMaxBucket)
-    val cands = mhCold.distinct().localCheckpoint(false, ser)
-    val candsSh = shColdL.distinct().localCheckpoint(false, ser)
     // previous committed snapshot: the lane seed (sound merge-emit —
     // Lsh.seedUnion) AND the incremental-CC base below. Fresh per batch,
     // so the no-pair-twice property holds exactly on this path.
     val prevAssign = committedSnapshots(spark, s"$root/clusters")
       .filter(_ < batchId).sorted.lastOption
       .map(id => spark.read.parquet(s"$root/clusters/batch_id=$id"))
-    // lanes are consumed twice now (payload probe ids + the join) — a lazy
-    // checkpoint materializes the lane subtree once; released at batch end
-    val mhLanesS = Lsh.withLaneSeeds(mhLanes, prevAssign)
-      .localCheckpoint(false, ser)
-    val shLanesS = Lsh.withLaneSeeds(shLanes, prevAssign)
-      .localCheckpoint(false, ser)
-    // ONE payload lookup per family covers the lane join AND the verify
-    // join (probe ids = lane members ∪ candidate-pair endpoints): both
-    // consumers are inner joins on ids ⊆ the probe set, so a shared
-    // superset table preserves results while halving the lookup count
-    def pairIds(p: DataFrame): DataFrame =
-      p.select(col("a").as("id")).unionByName(p.select(col("b").as("id")))
-    val shingleTbl = shinglesLookup(
-        mhLanesS.select(col("doc_id").as("id")).unionByName(pairIds(cands)))
-      .localCheckpoint(false, ser)
-    val simhashTbl = simhashLookup(
-        shLanesS.select(col("doc_id").as("id")).unionByName(pairIds(candsSh)))
-      .localCheckpoint(false, ser)
-    val mhLaneV = Lsh.jaccardIncrementalLanePairs(
-        mhLanesS.join(shingleTbl, "doc_id"), cfg.jaccardThreshold)
-      .localCheckpoint(false, ser)
-    val shLaneV = Lsh.hammingIncrementalLanePairs(
-        shLanesS.join(simhashTbl, "doc_id"), cfg.hammingThreshold)
-      .localCheckpoint(false, ser)
-    // one union action materializes all four checkpoints (the families
-    // overlap across the pool — the batch paths' discipline) and yields
-    // the counts gating the verify restrictions
-    val famCounts = cands.select(lit("mh").as("fam"))
-      .unionByName(candsSh.select(lit("sh").as("fam")))
-      .unionByName(mhLaneV.select(lit("mhv").as("fam")))
-      .unionByName(shLaneV.select(lit("shv").as("fam")))
-      .groupBy("fam").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    verifiedNewPairs(shingleTbl,
-        cands, famCounts.getOrElse("mh", 0L), cfg)
-      .select("a", "b").unionByName(mhLaneV)
-      .withColumn("family", lit("minhash"))
-      .unionByName(
-        verifiedNewPairsHamming(simhashTbl,
-          candsSh, famCounts.getOrElse("sh", 0L), cfg)
-          .select("a", "b").unionByName(shLaneV)
-          .withColumn("family", lit("simhash")))
-      // a pair colliding on a cold key AND a hot lane key would otherwise
-      // land twice in this batch's partition (the day path dedupes the
-      // same case inside Lsh.dupPairs)
-      .dropDuplicates("a", "b", "family")
+    // new × all pairs — the shared body (every emitted pair involves ≥1 new
+    // doc → no pair repeats across batches). Payloads are point lookups
+    // into the resident state, checkpointed once for the lane AND verify
+    // joins; released with the other transient blocks at batch end.
+    val scope = new Scope(spark)
+    Dedup.newPairs(newKeys, oldKeysLookup("keys", newKeys),
+        newKeysSh, oldKeysLookup("keys_sh", newKeysSh), prevAssign,
+        ids => scope.checkpoint(shinglesLookup(ids)),
+        ids => scope.checkpoint(simhashLookup(ids)),
+        substr = None, suppressed = None, scope, cfg)
       .write.mode("overwrite").parquet(s"$root/pairs/batch_id=$batchId")
     // Incremental CC over the CONTRACTED history: the previous committed
     // snapshot's (doc_id, cluster_id) rows are a spanning star of every
@@ -738,11 +694,7 @@ object StreamingDedup {
     // (candidate listings) are released here — without explicit unpersist
     // a long-running stream piles one set per micro-batch until the
     // ContextCleaner happens to notice (the CC round-lifecycle lesson).
-    // sh/sims/newKeys/newKeysSh are NOT released: they are this batch's
-    // resident-state entry, owned by the cache (released at fold/evict).
-    Seq(cands, candsSh, mhLanesS, shLanesS, shingleTbl, simhashTbl,
-        mhLaneV, shLaneV)
-      .foreach(unpersistCheckpoint)
+    scope.release()
     probeSets.foreach(r => scala.util.Try(r.unpersist(blocking = false)))
     lastResidentRowsProbed = probed.value
     lastResidentRowsMatched = matched.value
@@ -756,34 +708,6 @@ object StreamingDedup {
     * VERDICT_r6 #1 observability metric. */
   @volatile private[graft] var lastResidentRowsProbed: Long = 0L
   @volatile private[graft] var lastResidentRowsMatched: Long = 0L
-  private[graft] def lastResidentRowsTouched: Long =
-    lastResidentRowsProbed + lastResidentRowsMatched
-
-  /** RDD blocks behind a localCheckpoint'd DataFrame, released. */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
-
-  /** This batch's verified pairs: the shingle state (the caller passes the
-    * RESIDENT view — cache blocks, not a parquet re-scan) is additionally
-    * candidate-restricted BEFORE the verify join (count-gated broadcast
-    * LeftSemi — `Lsh.restrictToCandidateDocs`, the batch path's own
-    * discipline), so the join probes only candidate docs' rows.
-    * Plan-asserted in StreamingDedupSpec. */
-  private[streaming] def verifiedNewPairs(allShingled: DataFrame, cands: DataFrame,
-                                          nCands: Long, cfg: DedupConfig): DataFrame = {
-    val allSh = Lsh.restrictToCandidateDocs(allShingled, cands, 2 * nCands)
-    Lsh.verifyJaccard(cands, allSh, cfg).select("a", "b")
-  }
-
-  /** SimHash analog of `verifiedNewPairs`: exact Hamming against the
-    * candidate-restricted resident fingerprint state. */
-  private[streaming] def verifiedNewPairsHamming(allSimhashes: DataFrame, cands: DataFrame,
-                                                 nCands: Long, cfg: DedupConfig): DataFrame = {
-    val allSims = Lsh.restrictToCandidateDocs(allSimhashes, cands, 2 * nCands)
-    Lsh.verifyHamming(cands, allSims, cfg).select("a", "b")
-  }
 
   /** Ids whose state dirs are compaction-consolidation targets (they hold
     * the folded rows of earlier batches under one id's name) — recorded by
@@ -841,12 +765,5 @@ object StreamingDedup {
     pages
       .withWatermark("warc_ts", watermark)
       .groupBy(window(col("warc_ts"), window_), col("lang"))
-      .agg(count(lit(1)).as("n_docs"))
-
-  /** Session-window crawl-burst analytics (session gap per lang). */
-  def sessionBursts(pages: DataFrame, gap: String = "5 minutes"): DataFrame =
-    pages
-      .withWatermark("warc_ts", "10 minutes")
-      .groupBy(session_window(col("warc_ts"), gap), col("lang"))
       .agg(count(lit(1)).as("n_docs"))
 }

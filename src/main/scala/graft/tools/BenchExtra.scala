@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /**
  * Weather-calibrated per-query micro-bench (guide §1.4): for each selected
@@ -12,8 +11,8 @@ import org.apache.spark.sql.SparkSession
  *     walls much more than consumed CPU),
  *   - Σ executor run seconds and Spark job count (the fixed-overhead
  *     signal: every driver-synced job pays scheduling + tail latency),
- *   - a short 32-thread Burn wall before the rep (ambient marker — read
- *     walls against it).
+ *   - a short Burn wall before the rep, on as many threads as the session
+ *     has task slots (ambient marker — read walls against it).
  *
  * This is a SEPARATE main from the frozen graft.Bench (the driver harness);
  * its numbers are cited in OPTIMIZATION_r07.md as isolation evidence only.
@@ -28,23 +27,15 @@ object BenchExtra {
       if (args.nonEmpty && args(0).nonEmpty && args(0) != "all") Some(args(0).split(",").toSet)
       else None
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Sessions.toolCores
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt
     val localDir =
       if (new java.io.File("/dev/shm").isDirectory) {
         val d = new java.io.File("/dev/shm/graft-shuffle-extra")
         d.mkdirs(); d.getAbsolutePath
       } else System.getProperty("java.io.tmpdir")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(cpus,
+      "spark.local.dir" -> localDir, "spark.sql.shuffle.partitions" -> cpus.toString)
 
     // per-window job/task accounting
     val jobs = new java.util.concurrent.atomic.AtomicLong
@@ -66,12 +57,14 @@ object BenchExtra {
       }
     })
 
-    def burn32(): Double = {
-      // ~0.3-0.6 s ambient marker: same 4-chain ALU mix as Burn, 1/8 work
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(32)
+    def burn(): Double = {
+      // ambient marker: same 4-chain ALU mix as Burn, two chunks per thread
+      // of a pool as wide as the session's task slots
+      val threads = spark.sparkContext.defaultParallelism
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
       try {
         val t0 = System.nanoTime()
-        val futs = (0 until 64).map(_ => pool.submit(new java.util.concurrent.Callable[Long] {
+        val futs = (0 until 2 * threads).map(_ => pool.submit(new java.util.concurrent.Callable[Long] {
           def call(): Long = {
             var a = 0x9E3779B97F4A7C15L; var i = 0L
             var b = 0xC2B2AE3D27D4EB4FL; var c = 0x165667B19E3779F9L; var d = 0x27D4EB2F165667C5L
@@ -96,7 +89,7 @@ object BenchExtra {
     try graft.SparkEntry.queries("q01_doc_stats")(spark, sfDir).count() catch { case _: Throwable => }
     sel.foreach { case (name, fn) =>
       val rows = (1 to reps).map { r =>
-        val amb = burn32()
+        val amb = burn()
         jobs.set(0); runMs.set(0); cpuNs.set(0)
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -109,7 +102,7 @@ object BenchExtra {
       val best = rows.minBy(_._1)
       println(s"EXTRA $name min_wall=${f(best._1)} cpu@min=${f(best._2)} run@min=${f(best._3)} " +
         s"jobs=${best._4} walls=[${rows.map(r => f(r._1)).mkString(",")}] " +
-        s"cpus=[${rows.map(r => f(r._2)).mkString(",")}] burn32=[${rows.map(r => f(r._5)).mkString(",")}]")
+        s"cpus=[${rows.map(r => f(r._2)).mkString(",")}] burn=[${rows.map(r => f(r._5)).mkString(",")}]")
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 
 /** Dev utility: print the formatted physical plan + timing of one
   * SparkEntry query. Usage: runMain graft.tools.Explain <query> <sfDir>. */
@@ -8,15 +8,9 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.toolCores
+    // one shuffle partition per core, as graft.Bench runs
+    val spark = Sessions.local(cpus, "spark.sql.shuffle.partitions" -> cpus.toString)
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
     df.explain("formatted")
     val t0 = System.nanoTime()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 import java.nio.file.{Files, Paths}
 
 /** Dev utility: dump `.explain("formatted")` of every SparkEntry query (or a
@@ -16,15 +16,9 @@ object ExplainAll {
       else None
     val tag = if (args.length > 2) args(2) else "before"
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.toolCores
+    // one shuffle partition per core, as graft.Bench runs
+    val spark = Sessions.local(cpus, "spark.sql.shuffle.partitions" -> cpus.toString)
     Files.createDirectories(Paths.get(outDir))
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (subset.forall(_.contains(name))) {

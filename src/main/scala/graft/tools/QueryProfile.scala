@@ -1,9 +1,8 @@
 package graft.tools
 
-import graft.DedupConfig
+import graft.{DedupConfig, Sessions}
 import graft.functions.Fns
 import graft.operators.{ConnectedComponents, ExactSubstr, Lsh}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -13,13 +12,9 @@ object QueryProfile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Runtime.getRuntime.availableProcessors
+    // one shuffle partition per core, as graft.Bench runs
+    val spark = Sessions.local(cpus, "spark.sql.shuffle.partitions" -> cpus.toString)
     val cfg = DedupConfig.test
     def docs = graft.sources.TestData.documents(spark, dir)
       .select(col("doc_id"), col("text"))

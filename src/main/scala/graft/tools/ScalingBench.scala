@@ -1,10 +1,9 @@
 package graft.tools
 
-import graft.DedupConfig
+import graft.{DedupConfig, Sessions}
 import graft.operators.{ConnectedComponents, ExactSubstr, Lsh}
 import graft.run.DedupMain
 import graft.sources.PagesGen
-import org.apache.spark.sql.SparkSession
 
 /**
  * Scaling-efficiency evidence (north rule: ≥0.8 throughput efficiency from
@@ -25,7 +24,7 @@ import org.apache.spark.sql.SparkSession
 object ScalingBench {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_DOCS", "60000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Sessions.toolCores
     val cfg = DedupConfig.test
     val corpus = s"/tmp/graft_scale_corpus_$n"
     // self-bracketing ambient calibration (VERDICT_r5 #7): measured lazily
@@ -41,18 +40,8 @@ object ScalingBench {
         val d = new java.io.File("/dev/shm/graft-shuffle")
         d.mkdirs(); d.getAbsolutePath
       } else System.getProperty("java.io.tmpdir")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaling-bench")
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.warehouse.dir", s"$localDir/warehouse")
-      .config("spark.sql.shuffle.partitions", (2 * cpus).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus, "spark.app.name" -> "graft-scaling-bench",
+      "spark.local.dir" -> localDir, "spark.sql.warehouse.dir" -> s"$localDir/warehouse")
 
     // generate once; both parallelism levels read the identical files
     if (!new java.io.File(corpus + "/_SUCCESS").exists()) {
@@ -70,9 +59,9 @@ object ScalingBench {
       val pairs = graft.Dedup.dupPairs(docs, cfg).select("a", "b").localCheckpoint()
       val nPairs = pairs.count()
       val t1 = System.nanoTime()
-      spark.sparkContext.setJobDescription("graft:cc")
-      val out = ConnectedComponents.assign(pairs).count()
-      spark.sparkContext.setJobDescription(null)
+      val out = graft.Scope.phase(spark, "graft:cc") {
+        ConnectedComponents.assign(pairs).count()
+      }
       val t2 = System.nanoTime()
       println(f"  phase pairs=${(t1 - t0) / 1e9}%.1fs ($nPairs) cc=${(t2 - t1) / 1e9}%.1fs")
       out

@@ -48,6 +48,39 @@ class DedupSpec extends SparkSuite {
     }
   }
 
+  test("dupPairs labels its jobs with exactly the four phases, restoring the caller's") {
+    // the phase listeners (and the benchmark's Dedup.* metrics) key on
+    // these exact labels — a rename would silently zero them
+    val sc = spark.sparkContext
+    val key = "spark.job.description"
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        labels.add(Option(js.properties).flatMap(p => Option(p.getProperty(key))).getOrElse(""))
+    }
+    // marker jobs bracket the call; events arrive in posting order, so the
+    // end marker's arrival means every job in between has been seen
+    def marker(label: String): Unit =
+      Scope.phase(spark, label)(sc.parallelize(Seq(1), 1).count())
+    sc.addSparkListener(listener)
+    sc.setJobDescription("caller-label")
+    try {
+      marker("test:begin")
+      Dedup.dupPairs(docs, cfg)
+      assert(sc.getLocalProperty(key) === "caller-label")
+      marker("test:end")
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!labels.contains("test:end") && System.nanoTime() < deadline) Thread.sleep(50)
+      val seen = labels.toArray(Array.empty[String]).toSeq
+        .dropWhile(_ != "test:begin").drop(1).takeWhile(_ != "test:end")
+      assert(seen.toSet === Set("graft:listing-prep", "graft:listing-substr",
+        "graft:listings-famcounts-barrier", "graft:verify-union-ckpt"))
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("clusters carry all three evidence families on the planted corpus") {
     val fams = Dedup.dupPairs(docs, cfg)
       .select("family").distinct().as[String].collect().toSet

@@ -113,7 +113,7 @@ class StreamingDedupSpec extends SparkSuite {
     val someIds = docs.select("doc_id").as[Long].take(2)
     val cands = Seq((someIds(0), someIds(1))).toDF("a", "b")
     val allSh = spark.read.parquet(s"$root/shingled").select("doc_id", "shingles")
-    val plan = StreamingDedup.verifiedNewPairs(allSh, cands, 1L, cfg)
+    val plan = graft.Dedup.verifiedJaccard(cands, allSh, 1L, cfg)
       .queryExecution.executedPlan.toString
     assert(plan.contains("LeftSemi") && plan.contains("Broadcast"),
       s"expected broadcast left-semi candidate restriction:\n$plan")
