@@ -89,16 +89,19 @@ object Dedup {
     * One union count materializes every leg; its counts gate the
     * candidate restriction of the verify joins.
     *
-    * `shingles` / `simhashes` fetch a family's payload rows (doc_id,
-    * shingles) / (doc_id, simhash) for a set of ids (column `id`: lane
-    * members ∪ candidate endpoints); a superset is fine, every consumer is
-    * an inner join on those ids. `substr` is an optional pre-built lazy
+    * `shingles` / `simhashes` fetch a family's payload: given the seeded
+    * lanes and the cold candidates (a, b), they return the lanes to join
+    * (the same rows) and the payload rows (doc_id, shingles) / (doc_id,
+    * simhash) covering the lane members and candidate endpoints; a
+    * superset is fine, every consumer is an inner join on doc_id. A fetch
+    * that reads the lanes for its ids checkpoints them first, so the lane
+    * rows are computed once. `substr` is an optional pre-built lazy
     * substring leg; `suppressed` counts the loud caps. */
   private[graft] def newPairs(mhNew: DataFrame, mhOld: DataFrame,
                               shNew: DataFrame, shOld: DataFrame,
                               seed: Option[DataFrame],
-                              shingles: DataFrame => DataFrame,
-                              simhashes: DataFrame => DataFrame,
+                              shingles: (DataFrame, DataFrame) => (DataFrame, DataFrame),
+                              simhashes: (DataFrame, DataFrame) => (DataFrame, DataFrame),
                               substr: Option[DataFrame],
                               suppressed: Option[LongAccumulator],
                               scope: Scope, cfg: DedupConfig): DataFrame = {
@@ -106,16 +109,9 @@ object Dedup {
     val (shCold, shLanes) = Lsh.newVsAllListing(shNew, shOld, cfg.saltMaxBucket, suppressed)
     val mhc = scope.checkpoint(mhCold.distinct())
     val shc = scope.checkpoint(shCold.distinct())
-    // lanes feed the payload ids AND the lane join: checkpoint once
-    val mhLanesS = scope.checkpoint(Lsh.withLaneSeeds(mhLanes, seed))
-    val shLanesS = scope.checkpoint(Lsh.withLaneSeeds(shLanes, seed))
-    def ids(lanes: DataFrame, cands: DataFrame): DataFrame =
-      lanes.select(col("doc_id").as("id"))
-        .unionByName(cands.select(col("a").as("id")))
-        .unionByName(cands.select(col("b").as("id")))
     // ONE payload fetch per family feeds the lane join AND the verify join
-    val shTbl = shingles(ids(mhLanesS, mhc))
-    val simTbl = simhashes(ids(shLanesS, shc))
+    val (mhLanesS, shTbl) = shingles(Lsh.withLaneSeeds(mhLanes, seed), mhc)
+    val (shLanesS, simTbl) = simhashes(Lsh.withLaneSeeds(shLanes, seed), shc)
     val mhLaneV = scope.checkpoint(Lsh.jaccardIncrementalLanePairs(
       mhLanesS.join(shTbl, "doc_id"), cfg.jaccardThreshold, suppressed))
     val shLaneV = scope.checkpoint(Lsh.hammingIncrementalLanePairs(
@@ -182,7 +178,7 @@ object Dedup {
     val scope = new Scope(docs.sparkSession)
     try {
       val pairs = dupPairsPlan(docs, cfg, scope)
-      scope.phase("graft:verify-union-ckpt") { scope.result(pairs) }
+      scope.phase("graft:verify-union-ckpt") { Scope.keep(pairs) }
     } finally scope.release()
   }
 

@@ -5,7 +5,8 @@ import org.apache.spark.storage.StorageLevel
 
 /** The block and job-label lifetime of one pipeline run: every
   * `localCheckpoint` an entry point creates goes through `checkpoint` and
-  * is unpersisted by `release()` — repeated runs in one session (bench
+  * is unpersisted by `release()`, or through `Scope.keep` when it outlives
+  * the run — repeated runs in one session (bench
   * loops, notebooks, micro-batches) otherwise pile up executor storage
   * until the ContextCleaner happens to notice. `phase` labels the jobs a
   * body runs (`spark.job.description`, the key the phase listeners group
@@ -21,11 +22,6 @@ final class Scope(spark: SparkSession) {
     synchronized { owned += c }
     c
   }
-
-  /** `df` eagerly checkpointed into blocks the CALLER owns: the run's
-    * result, which outlives `release()`. */
-  def result(df: DataFrame): DataFrame =
-    df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
 
   /** Release one checkpoint ahead of the rest (a superseded round). */
   def release(df: DataFrame): Unit = {
@@ -44,6 +40,13 @@ final class Scope(spark: SparkSession) {
 
 object Scope {
   private val JobDescription = "spark.job.description"
+
+  /** `df` checkpointed into blocks the CALLER keeps and releases itself
+    * (`unpersist`): a run's result, or resident state that outlives every
+    * run's scope. */
+  def keep(df: DataFrame, eager: Boolean = true,
+           level: StorageLevel = StorageLevel.MEMORY_AND_DISK_SER): DataFrame =
+    df.localCheckpoint(eager, level)
 
   /** Run `body` with its jobs labelled `label`; the calling thread's
     * previous label comes back afterwards, also when `body` throws. */

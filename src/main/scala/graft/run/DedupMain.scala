@@ -511,8 +511,8 @@ object DedupMain {
     Dedup.newPairs(
         keys(isNew, "minhash"), keys(isOld, "minhash"),
         keys(isNew, "simhash"), keys(isOld, "simhash"), clustersSeed,
-        _ => shingled.where(isNew || isOld).select("doc_id", "shingles"),
-        _ => signatures.where(isNew || isOld).select("doc_id", "simhash"),
+        (lanes, _) => (lanes, shingled.where(isNew || isOld).select("doc_id", "shingles")),
+        (lanes, _) => (lanes, signatures.where(isNew || isOld).select("doc_id", "simhash")),
         Some(ExactSubstr.substrDupPairsIncremental(
           docs.where(isNew), docs.where(isOld), cfg, substrShards, Some(daySuppressed))),
         Some(daySuppressed), scope, cfg)

@@ -258,9 +258,8 @@ object StreamingDedup {
       case (t, _) => throw new IllegalArgumentException(s"unknown state table $t")
     }
 
-  /** One resident entry: its tables' checkpoint blocks belong to `scope`. */
   private final case class CachedBatch(id: Long, tables: Map[String, DataFrame],
-                                       scope: Scope, span: Int = 1,
+                                       span: Int = 1,
                                        indexes: Map[String, TableIndex] = Map.empty)
   private val stateCache =
     scala.collection.mutable.LinkedHashMap[String, Vector[CachedBatch]]()
@@ -283,7 +282,7 @@ object StreamingDedup {
     // already-stopped session (suite teardown) — releasing dead blocks
     // must not fail the live one
     cb.indexes.values.foreach(_.release())
-    cb.scope.release()
+    cb.tables.values.foreach(Scope.unpersist)
   }
 
   /** Drop a root's resident state (blocks released). The next batch on
@@ -299,7 +298,7 @@ object StreamingDedup {
     * the per-batch entries; callers assemble old/new/full views by
     * filtering ENTRIES (no batch_id column needed row-side). */
   private def residentState(spark: org.apache.spark.sql.SparkSession, root: String,
-                            batchId: Long, newRows: Map[String, DataFrame], newScope: Scope)
+                            batchId: Long, newRows: Map[String, DataFrame])
       : Vector[CachedBatch] = synchronized {
     val prevNewest = committedSnapshots(spark, s"$root/keys")
       .filter(_ != batchId).reduceOption(_ max _)
@@ -323,10 +322,10 @@ object StreamingDedup {
         // using its fresh handles either way)
         unpersistBatch(v.last)
         v.dropRight(1) :+
-          CachedBatch(batchId, newRows, newScope, v.last.span, indexesFor(newRows))
+          CachedBatch(batchId, newRows, v.last.span, indexesFor(newRows))
       case Some(v) if v.nonEmpty && prevNewest.contains(v.last.id) =>
         lastStateSource = "cache-extend"
-        binaryMerge(spark, v :+ CachedBatch(batchId, newRows, newScope, 1, indexesFor(newRows)))
+        binaryMerge(v :+ CachedBatch(batchId, newRows, 1, indexesFor(newRows)))
       case other =>
         // fresh JVM, evicted root, or a root recreated under a live cache
         // — the one O(state) read left: recovery. Prior batches collapse
@@ -335,15 +334,14 @@ object StreamingDedup {
         lastStateSource = "rebuild"
         other.foreach(_.foreach(unpersistBatch))
         val prior = prevNewest.map { pn =>
-          val rebuilt = new Scope(spark)
           val tabs = StateTables.map { t =>
-            t -> rebuilt.checkpoint(spark.read.parquet(s"$root/$t")
-              .where(col("batch_id") =!= batchId).drop("batch_id"), level = stateLevel)
+            t -> Scope.keep(spark.read.parquet(s"$root/$t")
+              .where(col("batch_id") =!= batchId).drop("batch_id"), eager = false, stateLevel)
           }.toMap
-          CachedBatch(pn, tabs, rebuilt, span = committedSnapshots(spark, s"$root/keys")
+          CachedBatch(pn, tabs, span = committedSnapshots(spark, s"$root/keys")
             .count(_ != batchId), indexes = indexesFor(tabs))
         }.toVector
-        prior :+ CachedBatch(batchId, newRows, newScope, 1, indexesFor(newRows))
+        prior :+ CachedBatch(batchId, newRows, 1, indexesFor(newRows))
     }
     stateCache.remove(root) // re-insert moves the root to LRU tail
     stateCache.put(root, next)
@@ -360,17 +358,14 @@ object StreamingDedup {
     * by id, so the current batch must stay its own entry until the next
     * batch makes it old. Width after n batches ≈ popcount(n)+1 ≤ log2(n)+1;
     * each row re-checkpoints O(log n) times total. */
-  private def binaryMerge(spark: org.apache.spark.sql.SparkSession,
-                          v: Vector[CachedBatch]): Vector[CachedBatch] = {
+  private def binaryMerge(v: Vector[CachedBatch]): Vector[CachedBatch] = {
     var old = v.dropRight(1)
     while (old.size >= 2 && old(old.size - 2).span == old(old.size - 1).span) {
       val (a, b) = (old(old.size - 2), old(old.size - 1))
-      val scope = new Scope(spark)
       val mergedTabs = StateTables.map { t =>
-        t -> scope.checkpoint(a.tables(t).unionByName(b.tables(t)),
-          eager = true, stateLevel)
+        t -> Scope.keep(a.tables(t).unionByName(b.tables(t)), level = stateLevel)
       }.toMap
-      val merged = CachedBatch(math.max(a.id, b.id), mergedTabs, scope,
+      val merged = CachedBatch(math.max(a.id, b.id), mergedTabs,
         a.span + b.span, indexesFor(mergedTabs))
       unpersistBatch(a); unpersistBatch(b)
       old = old.dropRight(2) :+ merged
@@ -603,8 +598,7 @@ object StreamingDedup {
     }
     // this batch's resident-state entry: its blocks belong to the cache
     // (released at fold/evict), not to this batch's transient scope
-    val state = new Scope(spark)
-    def stateTable(df: DataFrame) = state.checkpoint(df, eager = true, stateLevel)
+    def stateTable(df: DataFrame) = Scope.keep(df, level = stateLevel)
     val sh = stateTable(Lsh.shingled(batch, cfg))
     val sims = stateTable(Lsh.simhashes(batch, cfg))
     val newKeys = stateTable(
@@ -621,7 +615,7 @@ object StreamingDedup {
     // state), not the stream's lifetime
     val resident = residentState(spark, root, batchId, Map(
       "keys" -> newKeys, "keys_sh" -> newKeysSh,
-      "shingled" -> sh, "simhashes" -> sims), state)
+      "shingled" -> sh, "simhashes" -> sims))
     // Every state read below is a POINT LOOKUP against the entries'
     // hash-map indexes (VERDICT_r6 #1): resident rows touched per batch =
     // probes + matches — the increment's keys and the candidates' doc ids
@@ -662,13 +656,20 @@ object StreamingDedup {
       .map(id => spark.read.parquet(s"$root/clusters/batch_id=$id"))
     // new × all pairs — the shared body (every emitted pair involves ≥1 new
     // doc → no pair repeats across batches). Payloads are point lookups
-    // into the resident state, checkpointed once for the lane AND verify
-    // joins; released with the other transient blocks at batch end.
+    // into the resident state: ONE lookup per family, probed with the lane
+    // members ∪ candidate endpoints, checkpointed once for the lane AND
+    // verify joins. The lanes feed the probe ids and the lane join, so
+    // they are checkpointed too. All released at batch end.
     val scope = new Scope(spark)
+    def payload(lookup: DataFrame => DataFrame)(lanes: DataFrame, cands: DataFrame) = {
+      val l = scope.checkpoint(lanes)
+      (l, scope.checkpoint(lookup(l.select(col("doc_id").as("id"))
+        .unionByName(cands.select(col("a").as("id")))
+        .unionByName(cands.select(col("b").as("id"))))))
+    }
     Dedup.newPairs(newKeys, oldKeysLookup("keys", newKeys),
         newKeysSh, oldKeysLookup("keys_sh", newKeysSh), prevAssign,
-        ids => scope.checkpoint(shinglesLookup(ids)),
-        ids => scope.checkpoint(simhashLookup(ids)),
+        payload(shinglesLookup), payload(simhashLookup),
         substr = None, suppressed = None, scope, cfg)
       .write.mode("overwrite").parquet(s"$root/pairs/batch_id=$batchId")
     // Incremental CC over the CONTRACTED history: the previous committed
