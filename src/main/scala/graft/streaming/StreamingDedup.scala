@@ -142,7 +142,7 @@ object StreamingDedup {
    *    deserialization of the state per consumer per batch),
    *    so durable-state bytes read per batch track the BATCH, not the
    *    accumulated stream — spec-asserted via the source tag below and
-   *    measured in ScalingBench's stream mode (bytes-read column);
+   *    measured by the profiler's stream mode (bytes-read column);
    *  - entries merge LOGARITHMICALLY (binary counter over batch spans —
    *    Bentley-Saxe): adjacent old entries of equal span fold into one
    *    eager checkpoint, so the union-plan width stays O(log batches)
@@ -575,7 +575,7 @@ object StreamingDedup {
     // re-delivers). Re-delivering an id that a compaction consolidated
     // would overwrite `batch_id=<id>` — which now holds the folded state of
     // EVERY earlier batch — with one batch's rows. processBatch is public
-    // (tests, ScalingBench drive it directly), so fail loudly instead.
+    // (tests and the profiler drive it directly), so fail loudly instead.
     committedSnapshots(spark, s"$root/keys").reduceOption(_ max _).foreach { newest =>
       require(batchId >= newest,
         s"batch $batchId is older than the newest committed state dir " +

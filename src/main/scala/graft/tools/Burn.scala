@@ -39,7 +39,9 @@ object Burn {
     a ^ b ^ c ^ d
   }
 
-  private def wall(threads: Int, chunks: Int, itersPerChunk: Long): Double = {
+  /** Wall seconds for `chunks` chunks of `itersPerChunk` on a pool of
+    * `threads` — also the profiler's short per-run ambient marker. */
+  private[tools] def wall(threads: Int, chunks: Int, itersPerChunk: Long): Double = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     try {
       val t0 = System.nanoTime()
@@ -64,12 +66,15 @@ object Burn {
     }
   }
 
-  /** Measure the low→high thread-scaling ceiling (default 8→32, ~10 s —
-    * long enough that pool startup and scheduler jitter are noise).
-    * Chunks ≫ high so the tail is balanced; one warm round first (JIT). */
-  def measure(low: Int = 8, high: Int = 32, chunks: Int = 128,
-              itersPerChunk: Long =
-                sys.env.getOrElse("SPARK_GRAFT_BURN_ITERS", "120000000").toLong): Ceiling = {
+  private def cores = Runtime.getRuntime.availableProcessors
+
+  /** Measure the low→high thread-scaling ceiling, by default from a quarter
+    * of the host's cores to all of them: a pool wider than the host only
+    * measures oversubscription. Four chunks per `high` thread keep the
+    * tail balanced; one warm round first (JIT). */
+  def measure(low: Int = math.max(1, cores / 4), high: Int = cores,
+              itersPerChunk: Long = 120000000L): Ceiling = {
+    val chunks = 4 * high
     wall(high, chunks, itersPerChunk / 8) // JIT warmup, excluded
     val tl = wall(low, chunks, itersPerChunk)
     val th = wall(high, chunks, itersPerChunk)

@@ -334,7 +334,7 @@ class StreamingDedupSpec extends SparkSuite {
   }
 
   test("a stale batch replay is refused, not silently applied") {
-    // processBatch is public (ScalingBench and tests drive it directly);
+    // processBatch is public (the profiler and tests drive it directly);
     // re-delivering an id older than the newest committed state dir would
     // overwrite `batch_id=<id>` — after a compaction that dir holds the
     // folded state of every earlier batch — with one batch's rows
